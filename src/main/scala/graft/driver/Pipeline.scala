@@ -2,8 +2,8 @@ package graft.driver
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import graft.operators.{Flatten, Normalize}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
+import graft.operators.{Evolve, Flatten, Normalize}
 import graft.sinks.Writers
 
 /** The reference's end-to-end ETL (SURVEY §3.2 — `Lambda/
@@ -34,60 +34,90 @@ object Pipeline {
     val pType = parts.schema("p").dataType.asInstanceOf[StructType]
     val perksType = pType("perks").dataType.asInstanceOf[StructType]
 
-    // observed selections length per style side (reference emits one
-    // column per observed slot, `Utils/json.py:39-50`)
-    val slotCounts = {
-      val row = parts.agg(
-        max(coalesce(size(try_element_at(col("p.perks.styles"), lit(1)).getField("selections")), lit(0))),
-        max(coalesce(size(try_element_at(col("p.perks.styles"), lit(2)).getField("selections")), lit(0)))).head()
-      // max over an EMPTY batch is null — land an empty output, don't NPE
-      (if (row.isNullAt(0)) 0 else row.getInt(0),
-        if (row.isNullAt(1)) 0 else row.getInt(1))
-    }
-    val perkCols = Flatten.flattenPerksColumns(col("p.perks"), perksType, slotCounts)
-
     val keep = pType.fieldNames.filterNot(_ == "perks") // P9: del perks
-    val flatInput = parts.select(
-      (Seq("matchId", "gameCreation", "gameDuration", "gameVersion", "mapId", "source")
-        .map(col) ++ keep.map(f => col(s"p.$f").as(f)) ++ perkCols): _*)
-    Normalize.stripPrefixes(Flatten.flatten(flatInput), Seq("challenges_", "missions_"))
+    val base = Seq("matchId", "gameCreation", "gameDuration", "gameVersion", "mapId", "source")
+      .map(col) ++ keep.map(f => col(s"p.$f").as(f))
+
+    // observed selections length per style side (reference emits one
+    // column per observed slot, `Utils/json.py:39-50`), maxed in the
+    // flatten's own stats pass. Exact: the perk columns compile with
+    // emptyStats (no arrays or maps), so the stats of the non-perk columns
+    // are the stats of the whole flat input.
+    def slots(side: Int) =
+      coalesce(size(try_element_at(col("p.perks.styles"), lit(side)).getField("selections")), lit(0))
+    val (st, Seq(primary, secondary)) = Flatten.statsWith(
+      parts.select(base :+ slots(1).as("_slots_primary") :+ slots(2).as("_slots_secondary"): _*),
+      Seq(col("_slots_primary"), col("_slots_secondary")))
+    val perkCols = Flatten.flattenPerksColumns(col("p.perks"), perksType, (primary, secondary))
+
+    val flatInput = parts.select(base ++ perkCols: _*)
+    Normalize.stripPrefixes(Flatten.flatten(flatInput, precomputed = Some(st)),
+      Seq("challenges_", "missions_"))
   }
 
   /** `match_timelines` branch (`lambda_function.py:110-202`), INTENDED
     * semantics: all frames × participantFrames (E3), struct hoist (E5),
-    * puuid lookup join (E6). Output = `timeline_data` rows. */
+    * puuid lookup (E6). Output = `timeline_data` rows.
+    *
+    * The puuid lookup reads the SAME document's `info.participants` in-row
+    * (the reference's per-document dict, `lambda_function.py:136,148`), so
+    * a batch holding one timeline twice lands each row once per document,
+    * and a participant missing from the list gets a null puuid. */
   def timelineEtl(timeline: DataFrame): DataFrame = {
-    val participants = timeline.select(
-      col("metadata.matchId").as("matchId"),
-      explode(col("info.participants")).as("pp"))
-      .select(col("matchId"), col("pp.participantId").as("participantId"),
-        col("pp.puuid").as("puuid"))
     val frames = timeline.select(
       col("metadata.matchId").as("matchId"),
       col("info.endOfGameResult").as("endOfGameResult"),
+      col("info.participants").as("participants"),
       explode(col("info.frames")).as("f"))
     val pfType = frames.schema("f").dataType.asInstanceOf[StructType]("participantFrames")
       .dataType.asInstanceOf[StructType]
-    val pfRows = frames.select(col("matchId"), col("endOfGameResult"),
+    val pfRows = frames.select(col("matchId"), col("endOfGameResult"), col("participants"),
       col("f.timestamp").as("timestamp"),
       explode(Normalize.structToMap(col("f.participantFrames"), pfType))
         .as(Seq("participantId", "pf")))
-    val hoisted = pfRows.select(col("matchId"), col("endOfGameResult"),
-      col("timestamp"), col("participantId").cast("long").as("participantId"),
+      .withColumn("participantId", col("participantId").cast("long"))
+    val hoisted = pfRows.select(col("matchId"), col("participantId"),
+      col("endOfGameResult"), col("timestamp"),
       col("pf.currentGold").as("currentGold"), col("pf.level").as("level"),
       col("pf.xp").as("xp"),
       col("pf.championStats.*"), col("pf.damageStats.*"),
-      col("pf.position.x").as("position_x"), col("pf.position.y").as("position_y"))
-    hoisted.join(broadcast(participants), Seq("matchId", "participantId"), "left")
+      col("pf.position.x").as("position_x"), col("pf.position.y").as("position_y"),
+      explode_outer(filter(col("participants"),
+        p => p.getField("participantId") === col("participantId"))).as("pp"))
+    hoisted.withColumn("puuid", col("pp.puuid")).drop("pp")
   }
 
   /** `player-maps` branch (`lambda_function.py:100-108`): puuid-keyed
-    * stats document → rows. Output = `player_ranks_data`. */
-  def playerMapEtl(playerMap: DataFrame): DataFrame = {
-    val asMap = Normalize.structToMap(
-      struct(playerMap.columns.toIndexedSeq.map(col): _*), playerMap.schema)
-    playerMap.select(explode(asMap).as(Seq("puuid", "stats")))
+    * stats document → rows. Output = `player_ranks_data`.
+    *
+    * `docs` holds one whole document per row in a string column `value`
+    * (`spark.read.option("wholetext", true).text(path)`); `docType` is the
+    * document's inferred schema, one struct field per puuid. The document
+    * is parsed as `map<string, stats>` (SURVEY §E7), so the plan's size does
+    * not grow with the player count. `stats` is the union of the players'
+    * struct types, missing fields null, as JSON inference merges records:
+    * players whose stats carry different fields (Riot's optional
+    * `miniSeries`) share one row type, and an empty map lands zero rows. */
+  def playerMapEtl(docs: DataFrame, docType: StructType): DataFrame = {
+    val stats = docType.fields.map(_.dataType).collect { case s: StructType => s }
+      .foldLeft(new StructType())(mergeRecords(_, _).asInstanceOf[StructType])
+    docs.select(explode(from_json(col("value"), MapType(StringType, stats)))
+        .as(Seq("puuid", "stats")))
       .select(col("puuid"), col("stats.*"))
+  }
+
+  /** JSON inference's merge of two record types: fields unioned and
+    * sorted by name, records merged recursively, scalars widened by
+    * [[Evolve.widen]]. */
+  private def mergeRecords(a: DataType, b: DataType): DataType = (a, b) match {
+    case (x, y) if x == y => x
+    case (x: StructType, y: StructType) =>
+      val fields = (x.fields ++ y.fields).groupBy(_.name).toSeq.sortBy(_._1).map {
+        case (n, fs) => StructField(n, fs.map(_.dataType).reduce(mergeRecords))
+      }
+      StructType(fields)
+    case (ArrayType(x, _), ArrayType(y, _)) => ArrayType(mergeRecords(x, y))
+    case _ => Evolve.widen(a, b)
   }
 
   /** Full batch run (§3.1/§3.2): ETL the three document kinds, land each
@@ -106,7 +136,17 @@ object Pipeline {
     * `participants` array is empty explodes to zero player rows, so its
     * timeline fails the semi-join and is dropped. A timeline none of whose
     * rows can be attributed to a player carries no training signal, so the
-    * drop is the intended semantics, not an accident of the read-back. */
+    * drop is the intended semantics, not an accident of the read-back.
+    *
+    * Per window, 11 Spark jobs, each input parsed once per job that reads it:
+    *  - JSON schema inference of the matches, timelines and player map (3);
+    *  - the matches' stats: array lengths and perk slot counts in one
+    *    aggregation (2, map stage and result);
+    *  - the player_data write (1);
+    *  - the timeline_data write with its broadcast of the windowed
+    *    matchIds read back from player_data (3);
+    *  - the player map: the player_ranks_data write (2).
+    * No plan grows with the player count of the map. */
   def run(spark: org.apache.spark.sql.SparkSession,
       matchesPath: String, timelinesPath: String, playerMapPath: String,
       outDir: String, statePath: String, nowEpoch: Long,
@@ -155,7 +195,8 @@ object Pipeline {
       // The player snapshot is capped at the configured limit — the
       // reference's MAX_PLAYER_COUNT cut of the fetched list
       // (`EC2/fetcher.py:94`; test mode caps at 10)
-      playerMapEtl(readJson(playerMapPath))
+      playerMapEtl(spark.read.option("wholetext", true).text(playerMapPath),
+          readJson(playerMapPath).schema)
         .limit(config.playerLimit)
         .write.mode("overwrite").json(s"$outDir/player_ranks_data")
     }

@@ -61,7 +61,12 @@ object Flatten {
     *    per-reducer state is bounded by the number of DISTINCT keys, never
     *    by row count (collect_list-of-all-rows would OOM one reducer).
     */
-  def stats(df: DataFrame): NestedStats = {
+  def stats(df: DataFrame): NestedStats = statsWith(df, Nil)._1
+
+  /** [[stats]] plus `max(e)` of each integer `extraMax` column (null → 0),
+    * folded into the same array-length aggregation: a caller that needs a
+    * few more maxima over the same rows pays no extra pass. */
+  def statsWith(df: DataFrame, extraMax: Seq[Column]): (NestedStats, Seq[Int]) = {
     val lenExprs = mutable.ArrayBuffer.empty[(String, Column)]
     val keyExprs = mutable.ArrayBuffer.empty[(String, Column)]
 
@@ -97,17 +102,16 @@ object Flatten {
     }
 
     df.schema.fields.foreach(f => walk(Seq(f.name), f.dataType, col(f.name)))
-    if (lenExprs.isEmpty && keyExprs.isEmpty) return emptyStats
 
-    val lens: Map[String, Int] =
-      if (lenExprs.isEmpty) Map.empty
+    val maxima: Seq[Int] =
+      if (lenExprs.isEmpty && extraMax.isEmpty) Nil
       else {
-        val aggs = lenExprs.zipWithIndex.map { case ((_, e), i) => max(e).as(s"l$i") }
+        val aggs = (lenExprs.map(_._2) ++ extraMax).zipWithIndex.map { case (e, i) => max(e).as(s"l$i") }
         val row = df.agg(aggs.head, aggs.tail.toSeq: _*).head()
-        lenExprs.zipWithIndex.map { case ((p, _), i) =>
-          p -> (if (row.isNullAt(i)) 0 else row.getInt(i))
-        }.toMap
+        // max over an EMPTY frame is null — read it as 0
+        aggs.indices.map(i => if (row.isNullAt(i)) 0 else row.getInt(i))
       }
+    val lens = lenExprs.map(_._1).zip(maxima).toMap
 
     val keys: Map[String, Seq[String]] =
       if (keyExprs.isEmpty) Map.empty
@@ -128,7 +132,7 @@ object Flatten {
           p -> sortKeys(found.getOrElse(i, Seq.empty))
         }.toMap
       }
-    NestedStats(lens, keys)
+    (NestedStats(lens, keys), maxima.drop(lenExprs.size))
   }
 
   /** Numeric-aware deterministic key order: all-digit keys sort numerically

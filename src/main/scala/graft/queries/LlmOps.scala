@@ -1520,9 +1520,11 @@ object LlmOps {
     val centroids = {
       val c = Vectors.buildCentroids(v, "vec_id", "embedding", k,
         graft.operators.AnnGeometry.lloydSamplePeriod(n, k))
+      // restore the caller's label (a traced run's enclosing span), don't clear it
+      val outer = s.sparkContext.getLocalProperty("spark.job.description")
       s.sparkContext.setJobDescription("ivf:centroids")
       try c.localCheckpoint()
-      finally s.sparkContext.setJobDescription(null)
+      finally s.sparkContext.setJobDescription(outer)
     }
     val q = v.filter($"vec_id" < 10)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))

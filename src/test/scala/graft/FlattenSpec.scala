@@ -36,6 +36,18 @@ class FlattenSpec extends SparkSpec {
     assert(out.collect().toSeq == Seq(Row(1, 10, 20, 30), Row(2, 40, null, null)))
   }
 
+  test("statsWith: the stats of stats() plus extra maxima from the same aggregation") {
+    val df = Seq((1, Seq(10, 20, 30), Map("a" -> 1)), (7, Seq(40), Map("b" -> 2)))
+      .toDF("id", "xs", "m")
+    val (st, extra) = Flatten.statsWith(df, Seq($"id", size($"xs")))
+    assert(st == Flatten.stats(df))
+    assert(st.arrayLens == Map("xs" -> 3) && st.mapKeys == Map("m" -> Seq("a", "b")))
+    assert(extra == Seq(7, 3))
+    // an empty frame reads every maximum as 0, not null
+    assert(Flatten.statsWith(df.filter(lit(false)), Seq($"id")) ==
+      ((Flatten.NestedStats(Map("xs" -> 0), Map("m" -> Nil)), Seq(0))))
+  }
+
   test("array<array<_>> with asymmetric lengths: outer and inner stats stay distinct") {
     // Regression for the canonical-path collision: outer has max length 3,
     // inner max length 2 — without [] markers the inner stat (2) would

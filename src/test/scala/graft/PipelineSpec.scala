@@ -44,11 +44,67 @@ class PipelineSpec extends SparkSpec {
     assert(Pipeline.timelineEtl(readLol("timeline.json").filter(lit(false))).count() == 0)
   }
 
+  test("timelineEtl: a batch holding one timeline twice lands each row once per document") {
+    val dir = Files.createTempDirectory("graft_tl_dup")
+    val in = java.nio.file.Paths.get(new java.net.URI(TestSpark.fixture("timeline.json")))
+    Files.copy(in, dir.resolve("a.json"))
+    Files.copy(in, dir.resolve("b.json"))
+    val out = Pipeline.timelineEtl(
+      spark.read.option("multiLine", true).json(dir.toString))
+    // the reference's per-document puuid dict: 2 documents × 6 rows, never
+    // the 4× of a (matchId, participantId) join across the documents
+    assert(out.count() == 12)
+    val perRow = out.groupBy("participantId", "timestamp", "puuid").count()
+    assert(perRow.count() == 6 && perRow.filter($"count" =!= 2).isEmpty)
+  }
+
+  test("timelineEtl: a participant missing from info.participants gets a null puuid") {
+    val doc =
+      """{"metadata": {"matchId": "NA1_MISSING"},
+        | "info": {"endOfGameResult": "GameComplete",
+        |   "participants": [{"participantId": 1, "puuid": "p-001"}],
+        |   "frames": [{"timestamp": 60000, "participantFrames": {
+        |     "1": {"currentGold": 500, "level": 1, "xp": 0,
+        |       "championStats": {"armor": 30}, "damageStats": {"totalDamageDone": 5},
+        |       "position": {"x": 1, "y": 2}},
+        |     "3": {"currentGold": 450, "level": 1, "xp": 0,
+        |       "championStats": {"armor": 28}, "damageStats": {"totalDamageDone": 7},
+        |       "position": {"x": 3, "y": 4}}}}]}}""".stripMargin
+    val out = Pipeline.timelineEtl(spark.read.json(Seq(doc).toDS()))
+    assert(out.columns.head == "matchId" && out.columns(1) == "participantId" &&
+      out.columns.last == "puuid")
+    val puuids = out.select($"participantId", $"puuid").as[(Long, Option[String])]
+      .collect().toMap
+    assert(puuids == Map(1L -> Some("p-001"), 3L -> None))
+  }
+
+  /** The player-map stage's inputs for the document(s) at `path`: the whole
+    * text and the inferred per-puuid schema. */
+  private def playerMap(path: String) = Pipeline.playerMapEtl(
+    spark.read.option("wholetext", true).text(path),
+    spark.read.option("multiLine", true).json(path).schema)
+
   test("playerMapEtl: puuid map → ranked rows") {
-    val out = Pipeline.playerMapEtl(readLol("player_map.json"))
+    val out = playerMap(TestSpark.fixture("player_map.json"))
     assert(out.count() == 3)
     assert(out.filter($"puuid" === "p-003").select("leaguePoints")
       .head().getLong(0) == 1201L)
+  }
+
+  test("playerMapEtl: the plan does not grow with the player count") {
+    val dir = Files.createTempDirectory("graft_pm_wide")
+    val doc = (1 to 1000).map(i =>
+      f"""  "p-$i%04d": { "tier": "MASTER", "player_rank": "I", "leaguePoints": $i, """ +
+        s""""wins": ${100 + i}, "losses": 90, "time_stamp": 1753700000 }""")
+      .mkString("{\n", ",\n", "\n}\n")
+    Files.write(dir.resolve("player_map.json"), doc.getBytes("UTF-8"))
+    val small = playerMap(TestSpark.fixture("player_map.json"))
+    val wide = playerMap(dir.resolve("player_map.json").toString)
+    assert(wide.count() == 1000)
+    assert(wide.columns.toSeq == small.columns.toSeq)
+    def expressions(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.map(_.expressions.map(_.collect { case e => e }.size).sum).sum
+    assert(expressions(wide) == expressions(small))
   }
 
   test("run: full batch lands partitioned outputs and advances the window") {
@@ -179,7 +235,7 @@ class PipelineSpec extends SparkSpec {
     assert(tl.filter($"matchId" === "NA1_5200190036").count() == 6)
   }
 
-  test("run: matches JSON scanned exactly 3× (flatten stats + slot probe + write), no extra derivation pass") {
+  test("run: matches JSON scanned exactly 2× (fused stats + write), timelines JSON once") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -207,12 +263,56 @@ class PipelineSpec extends SparkSpec {
         Windows.WindowState(now - 6 * day, now - 4 * day)).isDefined)
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       val matchScans = scans.toArray.count(_.toString.endsWith("match.json"))
-      // 1 = Flatten.stats key discovery, 2 = the perks slot-count probe,
-      // 3 = the player_data write; a FOURTH scan means the windowed-matchId
-      // derivation regressed to re-parsing the raw JSON instead of reading
-      // the landed parquet
-      assert(matchScans == 3, s"matches JSON scanned $matchScans times:\n$scans")
+      // 1 = Flatten.statsWith (array lengths and the perks slot counts in
+      // one aggregation), 2 = the player_data write; a THIRD scan means the
+      // slot probe split off again or the windowed-matchId derivation
+      // regressed to re-parsing the raw JSON instead of reading the landed
+      // parquet
+      assert(matchScans == 2, s"matches JSON scanned $matchScans times:\n$scans")
+      // the puuid lookup is in-row: the timeline_data write is the only
+      // scan, no self-join re-parses the document
+      val timelineScans = scans.toArray.count(_.toString.endsWith("timeline.json"))
+      assert(timelineScans == 1, s"timelines JSON scanned $timelineScans times:\n$scans")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Runs one window over the match/timeline fixtures and a player map
+    * written from `doc`; returns the output dir and the processed window. */
+  private def runWithPlayerMap(doc: String): (String, Option[Windows.WindowState]) = {
+    val dir = Files.createTempDirectory("graft_pipe_pm").toString
+    val pm = java.nio.file.Paths.get(dir, "player_map.json")
+    Files.write(pm, doc.getBytes("UTF-8"))
+    val day = 24 * 3600L
+    val now = 1754000000L
+    def fx(n: String) = TestSpark.fixture(n)
+    (dir, Pipeline.run(spark, fx("match.json"), fx("timeline.json"), pm.toString,
+      s"$dir/out", s"$dir/state.json", now, Windows.WindowState(now - 6 * day, now - 4 * day)))
+  }
+
+  test("run: an empty player map lands zero rank rows and the window advances") {
+    val (dir, w) = runWithPlayerMap("{}\n")
+    assert(w.isDefined)
+    assert(graft.sinks.Writers.readState(s"$dir/state.json").isDefined)
+    assert(spark.read.schema("puuid STRING").json(s"$dir/out/player_ranks_data").count() == 0)
+    assert(spark.read.parquet(s"$dir/out/player_data").count() == 3)
+  }
+
+  test("run: players whose stats carry different fields share the union row type") {
+    // Riot's optional miniSeries: present for one player only
+    val (dir, w) = runWithPlayerMap(
+      """{
+        |  "p-001": { "tier": "MASTER", "player_rank": "I", "leaguePoints": 100, "wins": 30, "losses": 25,
+        |             "miniSeries": { "losses": 1, "progress": "WLN", "target": 3, "wins": 1 } },
+        |  "p-002": { "tier": "DIAMOND", "player_rank": "II", "leaguePoints": 7, "wins": 15, "losses": 14 }
+        |}""".stripMargin)
+    assert(w.isDefined)
+    val ranks = spark.read.json(s"$dir/out/player_ranks_data")
+    assert(ranks.count() == 2)
+    assert(ranks.columns.toSet == Set("puuid", "tier", "player_rank", "leaguePoints",
+      "wins", "losses", "miniSeries"))
+    val series = ranks.select($"puuid", $"miniSeries.progress").as[(String, Option[String])]
+      .collect().toMap
+    assert(series == Map("p-001" -> Some("WLN"), "p-002" -> None))
   }
 
   test("processFiles: corrupt/missing files yield typed errors; good files still land") {
@@ -293,7 +393,7 @@ class PipelineSpec extends SparkSpec {
   test("pipeline ETL plans have no single-task stage (no coalesce/repartition(1))") {
     Seq(Pipeline.matchEtl(readLol("match.json")),
       Pipeline.timelineEtl(readLol("timeline.json")),
-      Pipeline.playerMapEtl(readLol("player_map.json"))).foreach { df =>
+      playerMap(TestSpark.fixture("player_map.json"))).foreach { df =>
       val p = df.queryExecution.optimizedPlan.toString
       assert(!p.contains("Repartition 1"), s"single-task stage in plan:\n$p")
     }

@@ -482,6 +482,17 @@ class PlanSpec extends SparkSpec {
       "ivf_knn's plan no longer reads the materialized centroid table")
   }
 
+  test("building the ivf_knn frame keeps an enclosing job label") {
+    // a traced run labels its jobs by span; the labeled ivf:centroids
+    // build must hand the caller's label back, not clear it
+    val sc = spark.sparkContext
+    sc.setJobDescription("enclosing span")
+    try {
+      df("ivf_knn")
+      assert(sc.getLocalProperty("spark.job.description") == "enclosing span")
+    } finally sc.setJobDescription(null)
+  }
+
   test("quant_knn probes persisted int8 codes: no re-quantization, native int_dot") {
     val probe = plan("quant_knn")
     assert(probe.contains("graft_quant_"), "not reading the persisted codes")
